@@ -99,7 +99,7 @@ object GraftSession {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // reliable-checkpoint target for materialization barriers
-    // (NvdEtl.loadFeed); on a cluster this would be a durable FS path
+    // (NvdEtl.loadFeeds); on a cluster this would be a durable FS path
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(checkpointDir)
     s

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,8 +16,14 @@ import org.apache.spark.sql.types._
   * Spark-first differences, by design:
   *  - extract+transform is one declarative `spark.read.schema(...).json`
   *    (native gzip codec) + `explode(CVE_Items)` — no driver-side JSON pass;
-  *    a directory of feed files parallelizes per-file (each gz feed is one
-  *    task; the 100 TB shape is many feeds, not one giant file);
+  *    a set of feed files parallelizes per-file (each gz feed is one task;
+  *    the 100 TB shape is many feeds, not one giant file): the bootstrap
+  *    ingests, dedups and appends every feed in one load ([[loadFeeds]]),
+  *    not one load per feed;
+  *  - first writer wins, as in the reference's feed-by-feed load: a CVE
+  *    already in the warehouse is never reloaded, and across the feeds of
+  *    one load the row of the earliest feed (yearly feeds sorted, `recent`
+  *    last) wins;
   *  - the incremental set-difference is a distributed left-anti join on the
   *    CVE ID — never a collected id list on the driver;
   *  - the warehouse is year-partitioned parquet, so queries over a CVE-year
@@ -104,7 +112,17 @@ object NvdEtl {
     */
   def ingest(spark: SparkSession, feedPath: String,
       schemaPath: String = DefaultSchemaPath,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean = false): DataFrame =
+    explodeFeeds(spark, Seq(feedPath), schemaPath, strict).select("item.*")
+
+  /** The read behind [[ingest]], over any number of feed files in ONE
+    * read (one task per gz file): one `item` struct per CVE, plus the
+    * `perFeed` columns computed from each feed row (they may reference
+    * the feed file's `_metadata`). The drift guard names the offending
+    * file from the row's own input file, never from the list of paths.
+    */
+  private def explodeFeeds(spark: SparkSession, feedPaths: Seq[String],
+      schemaPath: String, strict: Boolean, perFeed: Column*): DataFrame = {
     val itemsType = ArrayType(itemSchema(schemaPath))
     val probeSchema = feedSchema(schemaPath)
       .add(StructField("version", StringType))
@@ -118,17 +136,19 @@ object NvdEtl {
       // real NVD 1.1 feeds publish minute-precision timestamps
       // ("2019-04-09T20:15Z") — seconds and millis must both be optional
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX")
-      .json(feedPath)
+      .json(feedPaths: _*)
       .select(explode(
         when(col("CVE_Items").isNull &&
             (col("vulnerabilities").isNotNull || col("version").isNotNull),
+          // input_file_name(), not _metadata.file_path: the metadata
+          // column adds two projections to every scan, ≈50 ms on a
+          // 3-feed, 6,000-CVE ingest at local[4]; a message needs no more
           raise_error(concat(
             lit("NVD feed schema drift: expected a 1.1 feed with " +
               "CVE_Items, found API-2.0 markers (version="),
             coalesce(col("version"), lit("?")),
-            lit(s", file=$feedPath)"))).cast(itemsType))
-          .otherwise(col("CVE_Items"))).as("item"))
-      .select("item.*")
+            lit(", file="), input_file_name(), lit(")"))).cast(itemsType))
+          .otherwise(col("CVE_Items"))).as("item") +: perFeed: _*)
   }
 
   /** The reference transform's staging artifact (etl.py:94-116): scrubbed
@@ -197,31 +217,84 @@ object NvdEtl {
       threshold: Long = 130000L): Boolean =
     countCves(spark, warehouseDir) < threshold
 
-  /** One incremental load step (reference bq-nvd.py:98-104): ingest a feed,
-    * drop already-present CVEs, append the rest. First-writer-wins across
-    * loads by construction. Returns the number of newly loaded CVEs.
-    */
+  /** One load step over a single feed — [[loadFeeds]] of one path. */
   def loadFeed(spark: SparkSession, feedPath: String, warehouseDir: String,
-      schemaPath: String = DefaultSchemaPath): Long = {
-    val feed = ingest(spark, feedPath, schemaPath)
-    // checkpoint(): a REAL materialization barrier, not a cache hint.
-    // The append below writes into the same directory the delta's
-    // anti-join lazily reads; persist() could silently drop partitions and
-    // recompute the delta WHILE the warehouse is being appended to. An
-    // eager reliable checkpoint truncates the lineage first, so the append
-    // can never re-read its own output.
-    val delta = newCves(feed, warehouse(spark, warehouseDir, schemaPath))
-      .checkpoint()
-    val n = delta.count()
-    if (n > 0) append(delta, warehouseDir)
-    n
+      schemaPath: String = DefaultSchemaPath): Long =
+    loadFeeds(spark, Seq(feedPath), warehouseDir, schemaPath)
+
+  /** One load over any number of feed files (reference bq-nvd.py:87-104,
+    * which loads the yearly feeds one after another): ingest them all in
+    * one read, drop already-present CVEs, append the rest in one write.
+    * Returns the number of newly loaded CVEs.
+    *
+    * The result is exactly that of loading the feeds one by one in the
+    * given order. Rows already in the warehouse win. Across feeds the
+    * first writer wins: a row of feed i survives only if no earlier feed
+    * holds its CVE ID. Within one feed every row survives, duplicate IDs
+    * included — the anti-join never dedups a feed against itself. With a
+    * single feed the first-writer step is the identity and is left out,
+    * so a one-feed load adds no shuffle.
+    */
+  def loadFeeds(spark: SparkSession, feedPaths: Seq[String],
+      warehouseDir: String, schemaPath: String = DefaultSchemaPath): Long =
+    if (feedPaths.isEmpty) 0L
+    else {
+      val feed =
+        if (feedPaths.size == 1) ingest(spark, feedPaths.head, schemaPath)
+        else firstWriter(spark, feedPaths, schemaPath)
+      // checkpoint(): a REAL materialization barrier, not a cache hint.
+      // The append below writes into the same directory the delta's
+      // anti-join lazily reads; persist() could silently drop partitions
+      // and recompute the delta WHILE the warehouse is being appended to.
+      // An eager reliable checkpoint truncates the lineage first, so the
+      // append can never re-read its own output.
+      val delta = newCves(feed, warehouse(spark, warehouseDir, schemaPath))
+        .checkpoint()
+      try {
+        val n = delta.count()
+        if (n > 0) append(delta, warehouseDir)
+        n
+      } finally dropCheckpoint(spark, delta)
+    }
+
+  /** [[ingest]] over several feed files, keeping for each CVE ID only the
+    * rows of the earliest feed that holds it. A row's feed is its file's
+    * position in `feedPaths`, matched on `_metadata.file_name`, so the
+    * paths must name files with distinct names. Null IDs, which no
+    * anti-join ever matches, all survive.
+    */
+  private def firstWriter(spark: SparkSession, feedPaths: Seq[String],
+      schemaPath: String): DataFrame = {
+    val names = feedPaths.map(p => new org.apache.hadoop.fs.Path(p).getName)
+    require(names.distinct.size == names.size,
+      s"feed file names must be distinct: ${feedPaths.mkString(", ")}")
+    explodeFeeds(spark, feedPaths, schemaPath, strict = false,
+        array_position(typedLit(names), col("_metadata.file_name")).as("__feed"))
+      .select("item.*", "__feed")
+      .withColumn("__first", min("__feed").over(Window.partitionBy(cveId)))
+      .filter(col("__feed") === col("__first") || cveId.isNull)
+      .drop("__feed", "__first")
   }
+
+  /** Deletes the reliable-checkpoint files behind `df`, a `checkpoint()`
+    * result, once nothing reads them any more — otherwise every load
+    * leaves its delta in the checkpoint dir until the JVM exits.
+    */
+  private def dropCheckpoint(spark: SparkSession, df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      .flatMap(_.getCheckpointFile)
+      .foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
 
   /** The reference's whole driver flow (bq-nvd.py:153-163 main):
     * greenfield/broken warehouse → bootstrap every yearly feed; healthy
-    * warehouse → load only the `recent` feed. Feed discovery is
-    * local-directory listing (the HTTP fetch of download.py is out of
-    * scope in a zero-egress build). Returns (bootstrapped?, CVEs loaded).
+    * warehouse → load only the `recent` feed; either way one
+    * [[loadFeeds]] call. Feed discovery is local-directory listing (the
+    * HTTP fetch of download.py is out of scope in a zero-egress build). A
+    * directory without feeds bootstraps nothing. Returns (bootstrapped?,
+    * CVEs loaded).
     */
   def run(spark: SparkSession, feedDir: String, warehouseDir: String,
       recentFeedName: String = "nvdcve-1.1-recent.json.gz",
@@ -229,20 +302,14 @@ object NvdEtl {
       schemaPath: String = DefaultSchemaPath): (Boolean, Long) = {
     val dir = new java.io.File(feedDir)
     require(dir.isDirectory, s"feed dir not found: $feedDir")
-    if (bootstrapNeeded(spark, warehouseDir, threshold)) {
-      // bootstrap: every feed file, yearly feeds first (reference
-      // bq-nvd.py:87-96 iterates 2002..now), recent last
-      val feeds = dir.listFiles().map(_.getName)
-        .filter(_.endsWith(".json.gz")).sorted
-        .sortBy(_ == recentFeedName) // recent last
-      val n = feeds.map(f => loadFeed(spark, s"$feedDir/$f", warehouseDir, schemaPath)).sum
-      (true, n)
-    } else {
-      val recent = new java.io.File(dir, recentFeedName)
-      val n = if (recent.isFile)
-        loadFeed(spark, recent.getPath, warehouseDir, schemaPath)
-      else 0L
-      (false, n)
-    }
+    val bootstrap = bootstrapNeeded(spark, warehouseDir, threshold)
+    val feeds =
+      if (bootstrap)
+        // every feed file, yearly feeds first (reference bq-nvd.py:87-96
+        // iterates 2002..now), recent last
+        dir.listFiles().map(_.getName).filter(_.endsWith(".json.gz")).sorted
+          .sortBy(_ == recentFeedName).toSeq
+      else Seq(recentFeedName).filter(new java.io.File(dir, _).isFile)
+    (bootstrap, loadFeeds(spark, feeds.map(f => s"$feedDir/$f"), warehouseDir, schemaPath))
   }
 }

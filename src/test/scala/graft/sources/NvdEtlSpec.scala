@@ -15,6 +15,27 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val fixture = NvdEtl.FixturePath
   private val recent = NvdEtl.RecentFixturePath
 
+  private def writeGz(path: String, text: String): Unit = {
+    val out = new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(path))
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The messages of an exception and all its causes. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil
+    else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
+  // the reference tracks feeds frozen at 1.1; NVD's successor API
+  // wraps CVEs as {"version":"2.0","vulnerabilities":[{"cve":{...}}]}
+  private val api2Feed =
+    """{"resultsPerPage":1,"startIndex":0,"totalResults":1,
+      |"format":"NVD_CVE","version":"2.0",
+      |"timestamp":"2024-01-01T00:00:00.000",
+      |"vulnerabilities":[{"cve":{"id":"CVE-2024-9999",
+      |  "sourceIdentifier":"cve@mitre.org","vulnStatus":"Analyzed"}}]}
+      |""".stripMargin
+
   test("nvd_ingest: gz feed → one row per CVE with the full nested schema") {
     val df = NvdEtl.ingest(spark, fixture)
     assert(df.schema === NvdEtl.itemSchema())
@@ -69,10 +90,7 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("nvd_ingest: corrupt feed → zero rows lenient, throws strict") {
     val dir = graft.TestSpark.tmpDir("nvd_corrupt")
     val path = s"$dir/broken.json.gz"
-    val out = new java.util.zip.GZIPOutputStream(
-      new java.io.FileOutputStream(path))
-    out.write("""{"CVE_data_type":"CVE","CVE_Items":[{"cve":{"CVE_data_""".getBytes)
-    out.close()
+    writeGz(path, """{"CVE_data_type":"CVE","CVE_Items":[{"cve":{"CVE_data_""")
     // lenient (default): malformed file contributes nothing
     assert(NvdEtl.ingest(spark, path).count() === 0)
     // strict: mirrors the reference's raise-on-corrupt
@@ -83,31 +101,17 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("nvd_ingest: a 2.0-API-shaped feed FAILS LOUDLY — never a " +
       "silently-empty load (r11 verdict #7)") {
-    // the reference tracks feeds frozen at 1.1; NVD's successor API
-    // wraps CVEs as {"version":"2.0","vulnerabilities":[{"cve":{...}}]}.
-    // Under the 1.1 schema that parses as CVE_Items = null, and the
-    // PERMISSIVE default would load ZERO rows without complaint — an
-    // incremental warehouse would record a successful empty run forever
+    // an API-2.0 feed parses under the 1.1 schema as CVE_Items = null,
+    // and the PERMISSIVE default would load ZERO rows without complaint —
+    // an incremental warehouse would record a successful empty run forever
     val dir = graft.TestSpark.tmpDir("nvd_v2")
     val path = s"$dir/api2.json.gz"
-    val out = new java.util.zip.GZIPOutputStream(
-      new java.io.FileOutputStream(path))
-    out.write(
-      """{"resultsPerPage":1,"startIndex":0,"totalResults":1,
-        |"format":"NVD_CVE","version":"2.0",
-        |"timestamp":"2024-01-01T00:00:00.000",
-        |"vulnerabilities":[{"cve":{"id":"CVE-2024-9999",
-        |  "sourceIdentifier":"cve@mitre.org","vulnStatus":"Analyzed"}}]}
-        |""".stripMargin.getBytes)
-    out.close()
+    writeGz(path, api2Feed)
     for (strict <- Seq(false, true)) {
       val e = intercept[Exception] {
         NvdEtl.ingest(spark, path, strict = strict).count()
       }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("schema drift")),
+      assert(msgs(e).exists(m => m.contains("schema drift") && m.contains("api2.json.gz")),
         s"strict=$strict raised without the drift diagnostic: $e")
     }
     // and the guard adds no false positives: the 1.1 fixture still loads
@@ -123,7 +127,7 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     // strict modes (FAILFAST rejects malformed JSON, not drifted JSON)
     val dir = graft.TestSpark.tmpDir("nvd_drift")
     val path = s"$dir/drift.json.gz"
-    val feed =
+    writeGz(path,
       """{"CVE_data_type":"CVE","CVE_data_format":"MITRE",
         |"CVE_data_version":"4.0","CVE_data_numberOfCVEs":"2",
         |"CVE_data_timestamp":"2024-01-01T00:00Z",
@@ -145,11 +149,7 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  "item_extra_field":"ignored"},
         | {"cve":{"CVE_data_meta":{"ID":"CVE-2024-0002",
         |    "ASSIGNER":"cve@mitre.org"}},
-        |  "publishedDate":"2024-01-03T00:00Z"}]}""".stripMargin
-    val out = new java.util.zip.GZIPOutputStream(
-      new java.io.FileOutputStream(path))
-    out.write(feed.getBytes("UTF-8"))
-    out.close()
+        |  "publishedDate":"2024-01-03T00:00Z"}]}""".stripMargin)
     for (strict <- Seq(false, true)) {
       val df = NvdEtl.ingest(spark, path, strict = strict)
       // unknown fields never surface in the schema…
@@ -243,5 +243,114 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = y2024.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cve_year"),
       s"expected partition pruning on cve_year in:\n$plan")
+  }
+
+  /** A 1.1 feed of minimal items, each (CVE ID or null, lastModifiedDate). */
+  private def feed11(items: Seq[(String, String)]): String =
+    items.map { case (id, modified) =>
+      val meta = Option(id).map(i => s""""CVE_data_meta":{"ID":"$i"}""").getOrElse("")
+      s"""{"cve":{$meta},"publishedDate":"2001-01-01T00:00Z",""" +
+        s""""lastModifiedDate":"$modified"}"""
+    }.mkString("""{"CVE_data_type":"CVE","CVE_Items":[""", ",", "]}")
+
+  /** A bootstrap dir of four feeds, in run's order: a hand-built yearly
+    * feed, the committed yearly fixture (k 0..95), a hand-built `modified`
+    * feed and the committed recent fixture (k 72..119), which overlaps the
+    * yearly one. The first hand-built feed shares IDs with both fixtures
+    * under different payloads and repeats IDs inside itself; the second
+    * repeats an ID the yearly fixture already holds; both carry a row
+    * without an ID.
+    */
+  private def bootstrapDir(): String = {
+    val dir = TestSpark.tmpDir("nvd_boot")
+    for (f <- Seq(fixture, recent)) {
+      val src = java.nio.file.Paths.get(f)
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(dir, src.getFileName.toString))
+    }
+    writeGz(s"$dir/nvdcve-1.1-2001.json.gz", feed11(Seq(
+      "CVE-2002-1000" -> "2030-01-01T00:00Z", // k=0, yearly fixture
+      "CVE-2005-1003" -> "2030-01-02T00:00Z", // k=3, yearly fixture, twice
+      "CVE-2005-1003" -> "2030-01-03T00:00Z",
+      "CVE-2006-1100" -> "2030-01-04T00:00Z", // k=100, recent fixture only
+      "CVE-2001-0001" -> "2030-01-05T00:00Z", // nowhere else, twice
+      "CVE-2001-0001" -> "2030-01-06T00:00Z",
+      (null, "2030-01-07T00:00Z"))))
+    writeGz(s"$dir/nvdcve-1.1-modified.json.gz", feed11(Seq(
+      "CVE-2003-1001" -> "2031-01-01T00:00Z", // k=1, yearly fixture, twice
+      "CVE-2003-1001" -> "2031-01-02T00:00Z",
+      "CVE-2001-0002" -> "2031-01-03T00:00Z", // nowhere else
+      (null, "2031-01-04T00:00Z"))))
+    dir
+  }
+
+  /** The bootstrap as one load per feed, in run's order. */
+  private def feedByFeed(dir: String, wh: String): Long =
+    new java.io.File(dir).list().filter(_.endsWith(".json.gz")).sorted
+      .sortBy(_ == "nvdcve-1.1-recent.json.gz")
+      .map(f => NvdEtl.loadFeed(spark, s"$dir/$f", wh)).sum
+
+  test("nvd_run: the one-load bootstrap equals loading feed by feed, " +
+      "bit for bit") {
+    val dir = bootstrapDir()
+    // greenfield, then a warehouse under the threshold that already holds
+    // the recent fixture — whose rows must win and never load twice
+    for ((preload, loaded) <- Seq(false -> 126L, true -> 78L)) {
+      val (fused, seq) = (TestSpark.tmpDir("nvd_fused"), TestSpark.tmpDir("nvd_seq"))
+      if (preload) for (wh <- Seq(fused, seq))
+        assert(NvdEtl.loadFeed(spark, recent, wh) === 48)
+      val (boot, n) = NvdEtl.run(spark, dir, fused, threshold = 1000)
+      assert(boot)
+      assert(n === feedByFeed(dir, seq))
+      assert(n === loaded)
+      val (a, b) = (NvdEtl.warehouse(spark, fused), NvdEtl.warehouse(spark, seq))
+      assert(a.count() === b.count())
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"preload=$preload: the warehouses differ")
+      // the first hand-built feed beats the yearly fixture, in-feed
+      // duplicates included; the recent fixture's k=100 row beats it only
+      // where it was loaded before the bootstrap; the `modified` feed's
+      // duplicates of a yearly-fixture ID both lose
+      def years(id: String) = a.filter(NvdEtl.cveId === id)
+        .select(date_format(col("lastModifiedDate"), "yyyy"))
+        .collect().map(_.getString(0)).toSeq
+      assert(years("CVE-2002-1000") === Seq("2030"))
+      assert(years("CVE-2005-1003") === Seq("2030", "2030"))
+      assert(years("CVE-2006-1100").size === 1)
+      assert((years("CVE-2006-1100") === Seq("2030")) === !preload)
+      assert(years("CVE-2003-1001").size === 1)
+      assert(years("CVE-2003-1001") !== Seq("2031"))
+      assert(a.filter(NvdEtl.cveId.isNull).count() === 2)
+    }
+  }
+
+  test("nvd_run: a bootstrap dir without feeds loads nothing and writes nothing") {
+    val dir = TestSpark.tmpDir("nvd_no_feeds")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "README.txt"), "no feeds".getBytes)
+    val wh = s"${TestSpark.tmpDir("nvd_no_feeds_wh")}/warehouse"
+    assert(NvdEtl.run(spark, dir, wh, threshold = 10) === ((true, 0L)))
+    assert(!new java.io.File(wh).exists())
+  }
+
+  test("nvd_run: an API-2.0 feed among 1.1 feeds fails the bootstrap, " +
+      "naming that one file") {
+    val dir = bootstrapDir()
+    writeGz(s"$dir/nvdcve-1.1-2024.json.gz", api2Feed)
+    val e = intercept[Exception] {
+      NvdEtl.run(spark, dir, TestSpark.tmpDir("nvd_drift_wh"), threshold = 10)
+    }
+    val m = msgs(e).mkString("\n")
+    assert(m.contains("schema drift") && m.contains("nvdcve-1.1-2024.json.gz"), m)
+    assert(!m.contains("nvdcve-1.1-fixture.json.gz"), m)
+  }
+
+  test("nvd_run: loads leave no reliable-checkpoint data behind") {
+    val ckpt = new java.io.File(
+      new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+    def rdds() = Option(ckpt.list()).toSeq.flatten.filter(_.startsWith("rdd-")).toSet
+    val before = rdds()
+    val wh = TestSpark.tmpDir("nvd_ckpt_wh")
+    assert(NvdEtl.run(spark, bootstrapDir(), wh, threshold = 10) === ((true, 126L)))
+    assert(NvdEtl.run(spark, "fixtures/nvd", wh, threshold = 10) === ((false, 0L)))
+    assert(rdds() -- before === Set.empty)
   }
 }
