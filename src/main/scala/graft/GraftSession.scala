@@ -98,8 +98,9 @@ object GraftSession {
   def build(cpus: Int): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint target for materialization barriers
-    // (NvdEtl.loadFeeds); on a cluster this would be a durable FS path
+    // reliable-checkpoint target for Barriers' reliable mode and the
+    // streaming dedup sinks' barriers (StreamOps); the NVD load writes
+    // none. On a cluster this would be a durable FS path
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(checkpointDir)
     s

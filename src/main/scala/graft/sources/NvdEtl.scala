@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,7 +26,12 @@ import org.apache.spark.sql.types._
   *  - the incremental set-difference is a distributed left-anti join on the
   *    CVE ID — never a collected id list on the driver;
   *  - the warehouse is year-partitioned parquet, so queries over a CVE-year
-  *    range prune partitions at the scan.
+  *    range prune partitions at the scan;
+  *  - a load is ONE Spark write job ([[load]]): the delta flows from the
+  *    anti-join straight into the append, which counts its own rows and
+  *    writes each CVE year of the load as one file — no materialization
+  *    barrier, no separate count pass (the argument for why the append can
+  *    never read its own output is on [[load]]).
   */
 object NvdEtl {
 
@@ -183,13 +187,30 @@ object NvdEtl {
   def cveYear: Column = substring(cveId, 5, 4).cast("int")
 
   /** Append to the year-partitioned parquet warehouse (replaces the GCS→BQ
-    * bulk load, reference bq.py:171-202). Caller is responsible for
-    * dedup via [[newCves]] — mirroring the reference, where transform
-    * scrubs duplicates before load ever runs.
+    * bulk load, reference bq.py:171-202) and return the number of rows
+    * appended. Caller is responsible for dedup via [[newCves]] — mirroring
+    * the reference, where transform scrubs duplicates before load ever runs.
+    *
+    * The rows are hash-repartitioned by year first, so each year lands in
+    * exactly one write task and a load writes one file per year, not one
+    * per (task, year): opening a parquet writer for the nested CVE schema
+    * costs more than the rows it writes. The partition count is explicit
+    * so that AQE never coalesces the write into one serial task. An empty
+    * delta writes no file.
+    *
+    * The count is an [[Observation]] attached AFTER the repartition, so its
+    * `CollectMetrics` node runs in the write's result stage, whose
+    * accumulator updates Spark merges once per partition; in a shuffle-map
+    * stage a stage retry could count rows twice.
     */
-  def append(df: DataFrame, warehouseDir: String): Unit =
+  def append(df: DataFrame, warehouseDir: String): Long = {
+    val rows = Observation()
     df.withColumn("cve_year", cveYear)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("cve_year"))
+      .observe(rows, count(lit(1)).as("n"))
       .write.partitionBy("cve_year").mode("append").parquet(warehouseDir)
+    rows.get("n").asInstanceOf[Long]
+  }
 
   /** The warehouse table, or an empty frame with the right schema if the
     * warehouse does not exist yet (greenfield).
@@ -222,10 +243,32 @@ object NvdEtl {
       schemaPath: String = DefaultSchemaPath): Long =
     loadFeeds(spark, Seq(feedPath), warehouseDir, schemaPath)
 
+  /** The one load path of the batch loader ([[loadFeeds]]) and the
+    * streaming sink (`StreamOps.warehouseSink`): drop the CVEs of `feed`
+    * already in the warehouse ([[newCves]]) and [[append]] the rest, as one
+    * Spark write job. Returns the number of newly loaded CVEs.
+    *
+    * The delta is never materialized before the append, although the
+    * append writes into the directory the anti-join reads. The append
+    * still can never read its own output:
+    *  - the anti-join's warehouse scan fixes its file list when
+    *    [[warehouse]] builds the relation — `InMemoryFileIndex` lists the
+    *    files once, and neither AQE re-planning nor a stage retry lists
+    *    them again;
+    *  - Spark allows an `Append` into a path the same plan reads; only
+    *    `Overwrite` is rejected;
+    *  - the committer publishes files only at job commit, so a failed load
+    *    leaves no part files behind.
+    */
+  def load(spark: SparkSession, feed: DataFrame, warehouseDir: String,
+      schemaPath: String = DefaultSchemaPath): Long =
+    append(newCves(feed, warehouse(spark, warehouseDir, schemaPath)), warehouseDir)
+
   /** One load over any number of feed files (reference bq-nvd.py:87-104,
     * which loads the yearly feeds one after another): ingest them all in
-    * one read, drop already-present CVEs, append the rest in one write.
-    * Returns the number of newly loaded CVEs.
+    * one read, drop already-present CVEs, append the rest in one write
+    * ([[load]]), one file per CVE year. Returns the number of newly loaded
+    * CVEs.
     *
     * The result is exactly that of loading the feeds one by one in the
     * given order. Rows already in the warehouse win. Across feeds the
@@ -233,7 +276,7 @@ object NvdEtl {
     * holds its CVE ID. Within one feed every row survives, duplicate IDs
     * included — the anti-join never dedups a feed against itself. With a
     * single feed the first-writer step is the identity and is left out,
-    * so a one-feed load adds no shuffle.
+    * so a one-feed load shuffles only for the year repartition.
     */
   def loadFeeds(spark: SparkSession, feedPaths: Seq[String],
       warehouseDir: String, schemaPath: String = DefaultSchemaPath): Long =
@@ -242,19 +285,7 @@ object NvdEtl {
       val feed =
         if (feedPaths.size == 1) ingest(spark, feedPaths.head, schemaPath)
         else firstWriter(spark, feedPaths, schemaPath)
-      // checkpoint(): a REAL materialization barrier, not a cache hint.
-      // The append below writes into the same directory the delta's
-      // anti-join lazily reads; persist() could silently drop partitions
-      // and recompute the delta WHILE the warehouse is being appended to.
-      // An eager reliable checkpoint truncates the lineage first, so the
-      // append can never re-read its own output.
-      val delta = newCves(feed, warehouse(spark, warehouseDir, schemaPath))
-        .checkpoint()
-      try {
-        val n = delta.count()
-        if (n > 0) append(delta, warehouseDir)
-        n
-      } finally dropCheckpoint(spark, delta)
+      load(spark, feed, warehouseDir, schemaPath)
     }
 
   /** [[ingest]] over several feed files, keeping for each CVE ID only the
@@ -275,18 +306,6 @@ object NvdEtl {
       .filter(col("__feed") === col("__first") || cveId.isNull)
       .drop("__feed", "__first")
   }
-
-  /** Deletes the reliable-checkpoint files behind `df`, a `checkpoint()`
-    * result, once nothing reads them any more — otherwise every load
-    * leaves its delta in the checkpoint dir until the JVM exits.
-    */
-  private def dropCheckpoint(spark: SparkSession, df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
-      .flatMap(_.getCheckpointFile)
-      .foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
 
   /** The reference's whole driver flow (bq-nvd.py:153-163 main):
     * greenfield/broken warehouse → bootstrap every yearly feed; healthy

@@ -519,8 +519,9 @@ object StreamOps {
   /** stream_warehouse_load: the streaming SINK of the reference's daily
     * pipeline — micro-batches of parsed CVEs land in the year-partitioned
     * warehouse through the SAME first-writer-wins path the batch loader
-    * uses ([[graft.sources.NvdEtl.newCves]] anti-join + partitioned
-    * append), so the streaming sink and the batch loader cannot diverge.
+    * uses ([[graft.sources.NvdEtl.load]]: newCves anti-join + partitioned
+    * append in one write job), so the streaming sink and the batch loader
+    * cannot diverge.
     * `foreachBatch` is Structured Streaming's bridge for sinks with their
     * own merge semantics: dedup WITHIN the stream is upstream
     * ([[nvdFeedStream]]'s checkpointed dropDuplicates); dedup across
@@ -535,12 +536,7 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // same materialization barrier as NvdEtl.loadFeed: the append
-        // writes into the directory the anti-join lazily reads
-        val delta = graft.sources.NvdEtl.newCves(batch.drop("cve_id"),
-          graft.sources.NvdEtl.warehouse(spark, warehouseDir)).checkpoint()
-        if (delta.count() > 0) graft.sources.NvdEtl.append(delta, warehouseDir)
+        graft.sources.NvdEtl.load(batch.sparkSession, batch.drop("cve_id"), warehouseDir)
         ()
       }
       .start()
@@ -575,8 +571,8 @@ object StreamOps {
           spark.read.parquet(whBandsDir),
           spark.read.parquet(whShinglesDir),
           sk.filter(size(col("sh")) > 0))
-        // same materialization barrier as the warehouse sink: the appends
-        // below write into directories the anti-join lazily reads
+        // materialization barrier: the appends below write into
+        // directories the anti-join lazily reads
         val surv = sk.join(dup, Seq("doc_id"), "left_anti").checkpoint()
         if (surv.count() > 0) {
           val banded = surv.filter(size(col("sh")) > 0)
@@ -665,8 +661,8 @@ object StreamOps {
         val sigs = graft.operators.Multimodal.cdcSigs(batch)
         val dup = graft.operators.Multimodal.cdcIncrementalDup(
           spark.read.parquet(whIndexDir), spark.read.parquet(whSigsDir), sigs)
-        // materialization barrier (see warehouseSink): the appends below
-        // write into directories the anti-join lazily reads
+        // materialization barrier (see minhashDedupSink): the appends
+        // below write into directories the anti-join lazily reads
         val surv = sigs.join(dup, Seq("doc_id"), "left_anti").checkpoint()
         if (surv.count() > 0) {
           surv.select(explode(col("digs")).as("dig"), col("doc_id"))

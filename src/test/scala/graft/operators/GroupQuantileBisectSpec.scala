@@ -72,7 +72,8 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
     val data = (1 to 300).map(_ => ("a", rnd.nextLong() % 1000000L)) ++
       (1 to 7).map(i => ("b", i * 1001L)) ++ Seq(("c", -9L))
     val expected = ref(data)
-    for (fan <- Seq(2, 8, 32)) {
+    // narrow, mid and the shipped fan, as the bisectMid cross-check below
+    for (fan <- Seq(2, 8, 32, Relational.BisectFan)) {
       val got = Relational
         .groupQuantileBisectCore(data.toDF("grp", "v"), fan = fan)
         .collect()

@@ -353,4 +353,99 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(NvdEtl.run(spark, "fixtures/nvd", wh, threshold = 10) === ((false, 0L)))
     assert(rdds() -- before === Set.empty)
   }
+
+  /** Every parquet file under `dir`, at any depth (`_temporary` included). */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Nil
+    else {
+      val walk = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      } finally walk.close()
+    }
+  }
+
+  test("nvd_load: a load with no new CVEs returns 0 and writes no file") {
+    val wh = TestSpark.tmpDir("nvd_empty_load_wh")
+    assert(NvdEtl.loadFeed(spark, recent, wh) === 48)
+    val before = parquetFiles(wh).toSet
+    assert(before.nonEmpty)
+    assert(NvdEtl.loadFeed(spark, recent, wh) === 0)
+    assert(parquetFiles(wh).toSet === before)
+    // a feed without CVE items, into that warehouse and into a greenfield one
+    val empty = s"${TestSpark.tmpDir("nvd_empty_feed")}/nvdcve-1.1-empty.json.gz"
+    writeGz(empty, feed11(Nil))
+    assert(NvdEtl.loadFeed(spark, empty, wh) === 0)
+    assert(parquetFiles(wh).toSet === before)
+    val green = s"${TestSpark.tmpDir("nvd_empty_green")}/warehouse"
+    assert(NvdEtl.loadFeed(spark, empty, green) === 0)
+    assert(parquetFiles(green) === Nil)
+    assert(NvdEtl.countCves(spark, green) === 0)
+  }
+
+  test("nvd_run: a bootstrap that fails on an API-2.0 feed leaves no " +
+      "parquet file in the warehouse") {
+    val dir = bootstrapDir()
+    writeGz(s"$dir/nvdcve-1.1-2024.json.gz", api2Feed)
+    val wh = TestSpark.tmpDir("nvd_failed_wh")
+    intercept[Exception](NvdEtl.run(spark, dir, wh, threshold = 10))
+    assert(parquetFiles(wh) === Nil)
+  }
+
+  test("nvd_run: a bootstrap writes each CVE year as exactly one file") {
+    val wh = TestSpark.tmpDir("nvd_layout_wh")
+    // the fixtures are so small that AQE coalesces the first-writer shuffle
+    // into one partition; a real bootstrap's delta spans many tasks, and
+    // with coalescing off this one spans all of spark.sql.shuffle.partitions
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try assert(NvdEtl.run(spark, bootstrapDir(), wh, threshold = 10) === ((true, 126L)))
+    finally spark.conf.unset(key)
+    val years = new java.io.File(wh).listFiles().filter(_.getName.startsWith("cve_year="))
+    assert(years.length === 26) // 2001..2025 and the null-ID rows' year
+    for (y <- years)
+      assert(y.list().count(_.endsWith(".parquet")) === 1, y.getName)
+  }
+
+  test("nvd_load: the load counts its rows in the write's own stage — no " +
+      "Exchange between the CollectMetrics node and the write") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case _ => p.children
+    }
+    def find(p: SparkPlan)(f: SparkPlan => Boolean): Option[SparkPlan] =
+      if (f(p)) Some(p) else kids(p).iterator.flatMap(find(_)(f)).nextOption()
+    // the nodes from `p` down to the first CollectMetricsExec, both included
+    def pathToMetrics(p: SparkPlan): Option[List[SparkPlan]] = p match {
+      case m: CollectMetricsExec => Some(List(m))
+      case _ => kids(p).iterator.flatMap(pathToMetrics).nextOption().map(p :: _)
+    }
+    val wh = TestSpark.tmpDir("nvd_plan_wh")
+    // the listener runs on the listener bus, after the load has returned
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        find(qe.executedPlan)(p => p.isInstanceOf[DataWritingCommandExec] &&
+          p.toString.contains(wh)).foreach(writes.put)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val write = try {
+      assert(NvdEtl.loadFeed(spark, fixture, wh) === 96)
+      writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(write != null, "no write plan reached the listener")
+    val path = pathToMetrics(write)
+    assert(path.isDefined, s"no CollectMetrics under the write:\n$write")
+    assert(!path.get.exists(p => p.isInstanceOf[Exchange] || p.isInstanceOf[QueryStageExec]),
+      s"an Exchange sits between the count and the write:\n$write")
+  }
 }
